@@ -524,7 +524,7 @@ def pq_codes(
     (iters+1)-th pass.  Reuse would silently encode with stale
     centroids and change every downstream hash.  The real repeat-build
     waste — retraining the book per build — is closed by the catalog's
-    session cache instead (_PQ_BOOK_CACHE)."""
+    side-cache instead (catalog._pq_book)."""
     cdf = emb.sparkSession.createDataFrame(book, "m int, code int, cv array<double>")
     return (
         _pq_assign(_subvectors(emb, m), cdf)
@@ -586,9 +586,10 @@ def ivf_pq_search(
     plus one broadcast codebook.
 
     ``book`` injects an already-trained codebook (the catalog shares one
-    per (session, sf_dir) — the _KMEANS_CENTS_CACHE pattern), so repeat
-    builds skip the Lloyd's training entirely; training in production is
-    a one-time index-build step, never part of serving.
+    per (session, sf_dir) through its side-cache, like the k-means
+    centroids), so repeat builds skip the Lloyd's training entirely;
+    training in production is a one-time index-build step, never part of
+    serving.
 
     Output matches :func:`cosine_topk` (query_id, rank, neighbor_id,
     cosine — float precision from the re-rank); deterministic end to

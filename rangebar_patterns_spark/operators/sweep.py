@@ -287,70 +287,13 @@ def with_signalset_quantiles(
         ]
     )
 
-    # round 13 (§4, VERDICT r12 #5): the Arrow pass groups by a HASH
-    # BUCKET of the series key instead of the raw
-    # (formation, feature, q, partner, symbol) key — the grouped-pandas
-    # runner pays a fixed per-group cost (frame assembly + schema
-    # conversion), so many small groups serialize on overhead; one
-    # bucketed frame sorts once and walks contiguous key runs with numpy
-    # boundary detection (the same shape the candidate-grain fullgrid
-    # kernel uses).  The bucket hash EXCLUDES q so every q of a series
-    # lands in the same run: the series (candidate membership and values)
-    # is q-independent by the dedup-key property above, so all of a run's
-    # q's come from ONE pass of sorted-window maintenance
-    # (excl_quantile_stream_multi), each extra q costing only its O(1)
-    # pick — guarded by an exact rn/length equality check that falls back
-    # to the per-subrun stream if the invariant ever failed.
     def compute(pdf):
-        pdf = pdf.sort_values(
-            ["formation", "feature", "partner", "symbol", "q", "rn"],
-            kind="mergesort",
-        ).reset_index(drop=True)
-        n = len(pdf)
-        out = np.empty(n, dtype="float64")
-        fm = pdf["formation"].to_numpy()
-        ft = pdf["feature"].to_numpy()
-        pt = pdf["partner"].to_numpy()
-        sy = pdf["symbol"].to_numpy()
-        qv = pdf["q"].to_numpy("float64")
-        rn = pdf["rn"].to_numpy()
-        vals = pdf["val"].to_numpy("float64", na_value=np.nan)
-        if n:
-            change = (
-                np.flatnonzero(
-                    (fm[1:] != fm[:-1])
-                    | (ft[1:] != ft[:-1])
-                    | (pt[1:] != pt[:-1])
-                    | (sy[1:] != sy[:-1])
-                )
-                + 1
-            )
-            bounds = np.concatenate(([0], change, [n]))
-            for s, e in zip(bounds[:-1], bounds[1:]):
-                qrun = qv[s:e]
-                qch = np.flatnonzero(qrun[1:] != qrun[:-1]) + 1
-                qb = np.concatenate(([0], qch, [e - s]))
-                first_len = qb[1] - qb[0]
-                first_rn = rn[s : s + first_len]
-                series = vals[s : s + first_len]
-                shared_qs = []
-                shared_spans = []
-                for a, b in zip(qb[:-1], qb[1:]):
-                    if (b - a) == first_len and np.array_equal(
-                        rn[s + a : s + b], first_rn
-                    ):
-                        shared_qs.append(float(qrun[a]))
-                        shared_spans.append((a, b))
-                    else:  # invariant miss: compute this subrun alone
-                        out[s + a : s + b] = excl_quantile_stream(
-                            vals[s + a : s + b], float(qrun[a]), lookback
-                        )
-                outs = excl_quantile_stream_multi(
-                    series, tuple(shared_qs), lookback
-                )
-                for (a, b), thr_arr in zip(shared_spans, outs):
-                    out[s + a : s + b] = thr_arr
-        pdf["thr"] = out
+        pdf = pdf.sort_values("rn", kind="mergesort").reset_index(drop=True)
+        pdf["thr"] = excl_quantile_stream(
+            pdf["val"].to_numpy("float64", na_value=np.nan),
+            float(pdf["q"].iloc[0]),
+            lookback,
+        )
         return pdf[["formation", "feature", "q", "partner", "symbol", "rn", "thr"]]
 
     sides = [
@@ -371,17 +314,8 @@ def with_signalset_quantiles(
     # referenced by both join sides below — persist so the Arrow quantile
     # pass runs once (the relation is small: one row per deduped
     # (formation, feature, q, partner) candidate)
-    spark = cand.sparkSession
-    n_buckets = 4 * int(spark.conf.get("spark.sql.shuffle.partitions"))
     thr = (
-        thr_input.withColumn(
-            "_bkt",
-            F.pmod(
-                F.hash("formation", "feature", "partner", "symbol"),
-                F.lit(n_buckets),
-            ).cast("int"),
-        )
-        .groupBy("_bkt")
+        thr_input.groupBy("formation", "feature", "q", "partner", "symbol")
         .applyInPandas(compute, thr_schema)
         .persist()
     )
@@ -1114,49 +1048,6 @@ def sweep_candidates_with_thresholds(
         )
     )
     return out.select(*_CAND_COLUMNS, "f1_thr", "f2_thr")
-
-
-#: grid width at which the fused pair-grain path starts to win.  The
-#: original series-grain pivot design carried constant scaffolding (two
-#: decode joins + a pivot shuffle) that only amortized at width, so small
-#: grids routed layered; after the pair-grain rewrite the fused path has
-#: no pivot at all and measured faster at EVERY width (sf0.1 medians of
-#: 3: 44-config grid 2.9 s fused vs 8.1 s layered; 1,008-config 2.5 s vs
-#: 6.5 s) — 0 routes everything fused except same-feature grids, which
-#: the fused path rejects and only the layered shape can express
-SWEEP_FUSED_MIN_CONFIGS = 0
-
-
-def sweep_candidates_auto(
-    feat: DataFrame,
-    spark: SparkSession,
-    grid: list[SweepConfig],
-    feature_cols: list[str],
-    warmup: int,
-    lookback: int = SIGNALSET_LOOKBACK,
-    **fused_kwargs,
-) -> DataFrame:
-    """Candidate-with-threshold relation, routed by grid width: wide grids
-    take the fused pair-grain path (:func:`sweep_candidates_with_thresholds`),
-    small grids — and any grid with same-feature configs, which the fused
-    path rejects — take the layered reference shape.  Both produce
-    identical rows (equivalence pinned in tests/test_sweep.py)."""
-    if len(grid) >= SWEEP_FUSED_MIN_CONFIGS and not any(
-        c.feature1 == c.feature2 for c in grid
-    ):
-        return sweep_candidates_with_thresholds(
-            feat, spark, grid, feature_cols, warmup, lookback, **fused_kwargs
-        )
-    return with_signalset_quantiles(
-        sweep_candidates(
-            feat,
-            sweep_grid_to_spark(spark, grid),
-            feature_cols,
-            warmup,
-            formations=grid_formations(grid),
-        ),
-        lookback,
-    )
 
 
 def _passes(val: str, direction: str, thr: str) -> F.Column:

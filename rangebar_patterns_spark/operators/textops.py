@@ -728,12 +728,6 @@ def benchmark_overlap_bloom(
     dbl_null = F.lit(None).cast("double")
 
     # --- benchmark shingles, partitioned for the partial-filter build ---
-    # round 13 (§2.4, VERDICT r12 #8): the panel's components used to be
-    # separate aggregates over re-executed copies of this subtree (the
-    # r12 plan showed ~24 Exchanges, zero reuse); the benchmark side is
-    # tiny at any scale (the eval split), so persist the distinct shingle
-    # relation once and let every component read the cache, and fuse the
-    # per-part/merged word aggregates into ONE grouping-sets pass below.
     bench_sh = (
         benchmark.select(
             F.concat(F.lit("doc:"), F.col("doc_id").cast("string")).alias(
@@ -746,9 +740,8 @@ def benchmark_overlap_bloom(
         )
         .select("part", hexint(F.col("s")).alias("shingle"))
         .distinct()
-        .persist()
     )
-    bench_global = bench_sh.select("shingle").distinct().persist()
+    bench_global = bench_sh.select("shingle").distinct()
     # filter geometry from the GLOBAL inserted count (partials must share
     # m for OR to be meaningful) — one scalar row, broadcast everywhere
     mrel = bench_global.agg(
@@ -822,10 +815,8 @@ def benchmark_overlap_bloom(
             ).alias("_words"),
         )
 
-    # every partial + the merged row in one densify pass; the relation is
-    # a handful of rows (one per bench doc + one), persisted because both
-    # the filter-row union and the probe's broadcast read it
-    dense_all = densify(sparse).persist()
+    # every partial + the merged row in one densify pass
+    dense_all = densify(sparse)
     dense_parts = dense_all.filter(F.col("part") != "__merged__")
     dense_merged = dense_all.filter(F.col("part") == "__merged__")
     n_ins_part = bench_sh.groupBy("part").agg(

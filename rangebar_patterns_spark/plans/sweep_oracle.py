@@ -87,15 +87,6 @@ GROUP BY config_id, symbol"""
     )
 
 
-def sweep_funnel_oracle(
-    grid: list[SweepConfig], warmup: int, feat_relation: str = "feat"
-) -> str:
-    ctes = ",\n".join(
-        _config_cand_cte(i, c, warmup, feat_relation) for i, c in enumerate(grid)
-    )
-    return f"{ctes}\nSELECT * FROM (\n{_funnel_unions(grid)}\n)"
-
-
 #: metrics columns the consolidated panel carries next to the funnel ones
 #: (barrier_oracle.BARRIER_METRICS_SELECT output minus the group keys)
 _PANEL_METRIC_COLS = (
@@ -162,18 +153,6 @@ sigs AS (
     FROM surv s JOIN fwdarr f USING (symbol, rn)
 ),
 {trades_chain_ctes(("config_id", "symbol"), side_expr="s.side")}"""
-
-
-def sweep_metrics_oracle(
-    grid: list[SweepConfig],
-    profiles: list[BarrierConfig],
-    warmup: int,
-    feat_relation: str = "feat",
-) -> str:
-    return (
-        sweep_trades_ctes(grid, profiles, warmup, feat_relation)
-        + barrier_metrics_select(("config_id", "symbol", "barrier_id"))
-    )
 
 
 def nfeature_metrics_oracle(

@@ -120,3 +120,22 @@ def test_disjoint_benchmark_scores_zero(spark):
     )
     out = benchmark_overlap(corpus.limit(50), bench)
     assert out.filter(F.col("n_contaminated") != 0).count() == 0
+
+
+def test_bloom_panel_leaves_no_persisted_relation(spark):
+    """The panel is a plan, not a cache owner: building and collecting it
+    must leave no persisted RDD behind, because nothing ever releases one
+    made here.  The reset first drops any cached twin of the panel's
+    relations from earlier tests, which would otherwise hide a new
+    persist."""
+    from rangebar_patterns_spark.plans.catalog import reset_plan_caches
+
+    reset_plan_caches(spark)
+
+    def persisted() -> set:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persisted()
+    corpus, bench = _split(spark)
+    benchmark_overlap_bloom(corpus, bench).collect()
+    assert not persisted() - before

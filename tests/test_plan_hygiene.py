@@ -225,21 +225,34 @@ def test_gen800_plan_is_join_free_past_the_bar_lookup(spark):
 
 
 def test_reset_plan_caches_covers_every_module_cache(spark):
-    """bench.py relies on reset_plan_caches to make repeat passes cold; a
-    module-level *_CACHE dict added without registering it in the reset
-    list would silently turn the medians warm.  Enumerate every cache in
-    the catalog namespace, plant a sentinel, and require reset to clear
-    them all."""
+    """Benchmarks rely on reset_plan_caches to make repeat passes cold.
+    Build bars, champion trades, the eval layers and one trained artifact
+    through their side-caches, then reset: every registered memo must be
+    empty, no RDD persisted by the build may survive, and the catalog may
+    hold no module-level *_CACHE dict outside the side_cache registry.
+    The first reset drops side-caches earlier tests built, which would
+    otherwise predate the baseline."""
     import rangebar_patterns_spark.plans.catalog as cat
 
-    cache_names = [
+    def persisted() -> set:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    cat.reset_plan_caches(spark)
+    before = persisted()
+    cat._bars(spark, SF_DIR).count()
+    cat._champion_trades(spark, SF_DIR).count()
+    for which in ("moments", "tail", "folds", "pbo", "evalues"):
+        cat._eval_layer(spark, SF_DIR, which)
+    cat._kmeans_cents(spark, SF_DIR)
+    assert sum(map(len, cat._SIDE_CACHES)) >= 9
+    assert persisted() - before
+    cat.reset_plan_caches(spark)
+    assert not any(cat._SIDE_CACHES)
+    left = persisted() - before
+    assert not left, f"persisted RDDs survive reset: {sorted(left)}"
+    stray = [
         n
         for n, v in vars(cat).items()
         if n.endswith("_CACHE") and isinstance(v, dict)
     ]
-    assert len(cache_names) >= 8, cache_names
-    for n in cache_names:
-        getattr(cat, n)["__sentinel__"] = None
-    cat.reset_plan_caches(spark)
-    stale = [n for n in cache_names if getattr(cat, n)]
-    assert not stale, f"reset_plan_caches does not clear: {stale}"
+    assert not stray, f"module-level caches outside side_cache: {stray}"

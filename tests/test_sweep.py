@@ -334,38 +334,47 @@ def test_threshold_shuffle_ceiling_reaches_cached_plan(spark):
     # and the scoped conf mutation must have been restored
     assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
 
-def test_auto_route_layered_for_same_feature_grids(spark):
-    """sweep_candidates_auto must route same-feature configs (feature1 ==
-    feature2, a shape the fused pair-grain path rejects with ValueError)
-    through the layered path regardless of grid width — wide grids that
-    contain even one such config cannot take the fused path."""
+def test_same_feature_config_needs_layered_reference(spark):
+    """A same-feature config (feature1 == feature2) is a shape only the
+    layered reference can express: the fused pair-grain path keys series
+    orientation by feature < partner, so it must refuse the config with
+    ValueError rather than drop it, while with_signalset_quantiles
+    returns both thresholds — equal when q1 == q2, since both sides then
+    read the same series at the same quantile."""
+    import numpy as np
+    import pytest
+
     from rangebar_patterns_spark.operators.sweep import (
-        SWEEP_FUSED_MIN_CONFIGS,
         SweepConfig,
         default_sweep_grid,
-        sweep_candidates_auto,
+        grid_formations,
+        sweep_candidates,
+        sweep_candidates_with_thresholds,
+        sweep_grid_to_spark,
+        with_signalset_quantiles,
     )
     from rangebar_patterns_spark.plans import catalog as C
 
-    base = default_sweep_grid()
-    # widen past the fused threshold by tiling quantile variants, then
-    # poison with one same-feature config
-    wide = [
-        SweepConfig(**{**c.__dict__, "q1": round(0.50 + 0.01 * k, 2)})
-        for k in range(1 + SWEEP_FUSED_MIN_CONFIGS // len(base))
-        for c in base
+    base = default_sweep_grid()[0]
+    grid = [
+        SweepConfig(**{**base.__dict__, "feature2": base.feature1, "q2": base.q1})
     ]
-    assert len(wide) >= SWEEP_FUSED_MIN_CONFIGS
-    poison = SweepConfig(
-        **{**wide[0].__dict__, "feature2": wide[0].feature1, "q2": 0.5}
-    )
     feat = C._featg(spark, SF_DIR)
-    out = sweep_candidates_auto(
-        feat, spark, wide + [poison], C.SWEEP_FEATURES, C.WARMUP
+    with pytest.raises(ValueError, match="same-feature"):
+        sweep_candidates_with_thresholds(
+            feat, spark, grid, C.SWEEP_FEATURES, C.WARMUP
+        )
+    out = with_signalset_quantiles(
+        sweep_candidates(
+            feat, sweep_grid_to_spark(spark, grid), C.SWEEP_FEATURES, C.WARMUP,
+            formations=grid_formations(grid),
+        )
     )
-    # layered path output: must plan without raising and carry the
-    # threshold columns both paths share
-    assert {"f1_thr", "f2_thr"} <= set(out.columns)
+    pdf = out.select("f1_thr", "f2_thr").toPandas()
+    assert len(pdf) > 0
+    assert np.array_equal(
+        pdf.f1_thr.to_numpy(float), pdf.f2_thr.to_numpy(float), equal_nan=True
+    )
 
 def test_fused_mixed_q_width_padding(spark):
     """Pairs in one grid may need different q-counts per orientation; the
